@@ -9,56 +9,12 @@ object Bench {
     val subset = args.toSet
     def enrolled = SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The codegen class cache holds 100 entries by default — far
-      // under this suite's 572 plans, so any reading taken more than
-      // ~100 plans after its warmup re-pays janino compilation
-      // (~0.3–1 s/row; measured round 13 on a warmup-all-then-time-
-      // once variant). The interleaved pairs below mostly dodge
-      // eviction by construction, but the end-of-run confirm pass and
-      // min-of-3 re-reads still benefit. Static conf: must be set at
-      // session build.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // AQE coalescing stays at Spark defaults (parallelismFirst=true,
-      // advisory 64m) — measured round 14, guide §1.2 step 3: forcing
-      // data-sized coalescing (parallelismFirst=false, 64m advisory)
-      // read 78.5 s vs 60.4 s default on a 40-row subset. The losers
-      // are CPU-bound per-key folds over small shuffles (croston
-      // 1.78→5.03 s, weighted_median 2.28→4.31, jaccard 1.57→3.61) —
-      // at THIS suite's scale the reduce stages are compute-bound, not
-      // task-overhead-bound, so byte-targeted coalescing serializes
-      // real work. OPTIMIZATION_r14.md has the full A/B table.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     System.err.println("[bench] codegen.cache.maxEntries = " +
       spark.conf.getOption("spark.sql.codegen.cache.maxEntries"))
-    // Force FULL query execution including the final global sort:
-    // .count() would let Catalyst eliminate the orderBy and prune every
-    // projected expression (EliminateSorts/ColumnPruning), timing a
-    // fraction of the real query. The noop V2 sink consumes every row
-    // of the completed plan instead.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Boolean =
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        true
-      } catch { case _: Throwable => false }
-    // One timed run; CacheManager matches canonicalized plans, so a
-    // re-built identical DataFrame in a later run would silently reuse
-    // cached data — drop the cache eagerly, outside the timing window.
+    // one timed build + noop write per call; -1 marks a failed query
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      val ok = run(fn)
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) dt else -1.0 // -1 marks a failed query
-    }
+        : Double = GraftSession.timeNoop(spark)(fn(spark, sfDir))
     // INTERLEAVED ADAPTIVE SCHEME (round 13 — VERDICT r12 #1: the r12
     // driver bench TIMED OUT; the old shape — sequential untimed
     // warmup pass over the whole suite + unconditional min-of-3 + a
@@ -249,7 +205,7 @@ object Bench {
         s""""$n":{"first":${r3(first)},"final":${r3(fin)}}""" }
       .mkString("{", ",", "}")
     val detailed =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"over_budget":$over,"budget_sec":$budgetSec,"retimed":$retimedJson,"wall_sec":$wallSec,"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"over_budget":$over,"budget_sec":$budgetSec,"retimed":$retimedJson,"wall_sec":$wallSec,"cpus":${GraftSession.cpus},"sf":"$sfDir"}"""
     println(detailed)
     // Per-family rollup (round 9, r8 verdict hygiene ask): the driver
     // keeps a bounded stdout tail, so when the ~500-row per-query map

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `fvec_norm` expressions, and its oracle is the SAME oracle text the
   * DataFrame-built `q_llm_cosine_topk` row already hash-matches — the
   * two rows share one truth, reached through two APIs. */
-object GraftCatalog {
+object GraftCatalog extends Enrolled {
 
   /** Table names backed directly by `<sfDir>/<name>.parquet`. */
   val tableNames: Seq[String] = Seq("region", "nation", "customer",

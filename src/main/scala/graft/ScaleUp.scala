@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 fixture builder (round 9): a deterministic 10× scale-up of the
@@ -35,17 +35,14 @@ object ScaleUp {
     * ~6·10⁶ for event_id), so replica ranges can never collide. */
   val OFF = 100000000L
 
+  /** Files per replicated table: the count earlier sf1 fixtures were
+    * built with, so their SCALING.json readings stay comparable. */
+  val FilesPerTable = 32
+
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "testdata-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def replicate(name: String, keys: Seq[String],
         tweak: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
@@ -56,8 +53,10 @@ object ScaleUp {
         tweak(shifted, r)
       }.reduce(_ unionAll _)
       // repartition so sf1 files parallelize like a real bigger fixture
-      // (10 unioned single-file scans would serialize the read side)
-      ten.repartition(cpus.toInt)
+      // (10 unioned single-file scans would serialize the read side);
+      // a fixed file count keeps the layout independent of the box
+      // that built it
+      ten.repartition(FilesPerTable)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[scaleup] $name -> $out (${ten.columns.mkString(",")})")
     }

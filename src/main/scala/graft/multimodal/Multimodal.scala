@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * never touch the blob bytes (column pruning keeps blobs unread), and
   * blobs stay distributed — nothing is collected to the driver.
   */
-object Multimodal {
+object Multimodal extends graft.Enrolled {
 
   val MAGIC: Array[Byte] = "GRFT".getBytes("US-ASCII")
 

@@ -14,7 +14,7 @@ import graft.Tables._
   * `collect()` anywhere; grouping keys are low-cardinality so the final
   * shuffle is tiny regardless of input scale.
   */
-object Aggregates {
+object Aggregates extends graft.Enrolled {
 
   /** Flagship — TPC-H Q1 pricing summary clone.
     * Reference analog: the daily/char rollups the mu-swarm-logger's

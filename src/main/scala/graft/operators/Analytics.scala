@@ -21,7 +21,7 @@ import graft.Tables._
   * self-joins, no driver materialization. The global summary rows
   * (funnel) aggregate from per-user rows, which is partial-aggregable.
   */
-object Analytics {
+object Analytics extends graft.Enrolled {
 
   private val Micros7d = 7L * 24 * 3600 * 1000000L
 
@@ -181,7 +181,7 @@ object Analytics {
   /** Doc count below which the verify tail uses candidate-side
     * SHUFFLE_HASH builds instead of the planner's unhinted choice —
     * between the two measured points of the round-15 order-alternating
-    * interleaved A/B (tools.AbPrefixJoin, one JVM): at sf0.1 (5,000
+    * interleaved A/B (tools.Ab prefix_join, one JVM): at sf0.1 (5,000
     * docs) SHUFFLE_HASH wins all 6 rounds (median 3.10 s vs 3.89 —
     * the two doc-sized broadcast BUILDS dominate a small corpus), at
     * sf1 (50,000 docs) the unhinted form wins all 6 rounds (median

@@ -23,7 +23,7 @@ import graft.Tables._
   * candidate sets the LSH family already bounds; probe sides are
   * fixed-arity (20 vectors). Nothing here is corpus × corpus.
   */
-object Curation {
+object Curation extends graft.Enrolled {
 
   private val stop7 = "('the','a','of','and','to','in','is')"
 

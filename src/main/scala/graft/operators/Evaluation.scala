@@ -16,7 +16,7 @@ import graft.Tables._
   * in both engines (the zipf/dsir log-rounding rule); everything after
   * is BIGINT sums and truncating division.
   */
-object Evaluation {
+object Evaluation extends graft.Enrolled {
 
   /** Per-doc graded relevance 0..3 = how many of the three query terms
     * the document contains — derived from content, shared by both

@@ -18,7 +18,7 @@ import graft.Tables._
   * sort). Per-row double arithmetic is left un-rounded: identical IEEE
   * ops on identical inputs are bit-equal across engines.
   */
-object Filters {
+object Filters extends graft.Enrolled {
 
   /** Derived column: revenue = extendedprice * (1 - discount). */
   def projectCompute(spark: SparkSession, dir: String): DataFrame =

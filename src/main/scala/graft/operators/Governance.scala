@@ -34,7 +34,7 @@ import graft.Tables._
   * approx_count_distinct (HLL) per column, which this engine already
   * ships (q_agg_approx_distinct / q_agg_hll_merge).
   */
-object Governance {
+object Governance extends graft.Enrolled {
 
   private def cents(c: String): Column =
     expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")

@@ -23,7 +23,7 @@ import graft.Tables._
   * LlmOps.connectedComponents. Degrees are computed once and re-joined
   * per iteration (tiny vs the edge table; broadcastable at any scale).
   */
-object Graph {
+object Graph extends graft.Enrolled {
 
   /** 3 exact-integer PageRank iterations over the undirected (both
     * directions materialized) part↔supplier graph.

@@ -28,7 +28,7 @@ import graft.Tables._
   *   operator (graft.plans.AsOfJoin, q_join_asof_native) — same
   *   semantics, one sort-merge pass with O(1) state in the native form.
   */
-object Joins {
+object Joins extends graft.Enrolled {
 
   /** Broadcast hash join: fact ⋈ tiny dim, no fact shuffle. */
   def joinBroadcast(spark: SparkSession, dir: String): DataFrame =

@@ -16,7 +16,7 @@ import graft.Tables._
   * no shuffle to compute), and the layout write is one
   * `repartitionByRange(zkey) + sortWithinPartitions(zkey)` pass.
   */
-object Layout {
+object Layout extends graft.Enrolled {
 
   /** 32-bit Morton key: interleave the low 16 bits of two int columns
     * (bit i of `a` → bit 2i, bit i of `b` → bit 2i+1). The fold is

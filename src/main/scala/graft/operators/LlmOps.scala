@@ -27,7 +27,7 @@ import graft.Tables._
   * - All shingle/token explodes are generator-based (no driver
   *   materialization); profiles and perm tables are tiny broadcasts.
   */
-object LlmOps {
+object LlmOps extends graft.Enrolled {
 
   private val P = 1000000007L
 
@@ -1855,7 +1855,7 @@ object LlmOps {
     * fold is partial-aggregable, top-20 via TakeOrdered. */
   /** Doc count above which the pair join switches to hashed shingle
     * keys — between the two measured points of the round-15
-    * order-alternating interleaved A/B (tools.AbRareShingle, one JVM,
+    * order-alternating interleaved A/B (tools.Ab rare_shingle, one JVM,
     * order bias cancelled): at sf0.1 (5,000 docs) STRINGS win every
     * round (median 2.82 s vs hashed 3.90 — the md5 digest over the
     * corpus-sized explode outweighs the narrower shuffle), at sf1

@@ -24,7 +24,7 @@ import graft.Tables._
   * (low-cardinality) group key; in production the base side is the
   * stored rollup table and only the delta side is computed per batch.
   */
-object Maintenance {
+object Maintenance extends graft.Enrolled {
 
   def incrAggMerge(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)

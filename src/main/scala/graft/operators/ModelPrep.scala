@@ -30,7 +30,7 @@ import graft.Tables._
   *   once, on an exact integer sum.
   * - bpe_merge / url_canon: pure integer counts / string rewrites.
   */
-object ModelPrep {
+object ModelPrep extends graft.Enrolled {
 
   /** IEEE-deterministic 4-decimal rounding (see LlmOps.r4). */
   private def r4(c: Column): Column =

@@ -18,7 +18,7 @@ import graft.Tables._
   * keys only (no global sort); the Q3 composite joins dim→fact smallest
   * first so AQE broadcast kicks in.
   */
-object Reshape {
+object Reshape extends graft.Enrolled {
 
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
 

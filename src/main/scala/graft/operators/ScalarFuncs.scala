@@ -14,7 +14,7 @@ import graft.Tables._
   * (Actor.Attributes). All are codegen'd built-in expressions — no UDFs
   * in these hot paths (SURVEY §4).
   */
-object ScalarFuncs {
+object ScalarFuncs extends graft.Enrolled {
 
   /** IRI minting + case/pad/substring string ops. */
   def strIriMint(spark: SparkSession, dir: String): DataFrame =

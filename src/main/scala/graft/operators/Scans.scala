@@ -18,7 +18,7 @@ import graft.Tables._
   * `PushedFilters`/`ReadSchema` in .explain). The triples export is a
   * narrow projection + explode — no shuffle at all until the final sort.
   */
-object Scans {
+object Scans extends graft.Enrolled {
 
   /** Fixed per-query scratch dir (reused with overwrite across runs) —
     * a fresh createTempDirectory per invocation would accumulate a new

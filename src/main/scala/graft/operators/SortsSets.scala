@@ -16,7 +16,7 @@ import graft.Tables._
   * merge of k, not a full sort); set ops are hash aggregates/joins on the
   * key — all shuffle-once patterns.
   */
-object SortsSets {
+object SortsSets extends graft.Enrolled {
 
   /** Multi-key global sort with explicit null ordering. */
   def sortMultiNulls(spark: SparkSession, dir: String): DataFrame =

@@ -14,7 +14,7 @@ import graft.Tables._
   * per-row re-execution; the scalar subquery is one global aggregate
   * broadcast to the probe side.
   */
-object Subqueries {
+object Subqueries extends graft.Enrolled {
 
   /** Register only the views these six queries actually reference.
     * (Round 6 lesson: an unconditional `sq_events` registration here made

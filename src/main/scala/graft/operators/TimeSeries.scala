@@ -27,7 +27,7 @@ import graft.Tables._
   *   standard robustness choice: one corrupt batch of outliers moves a
   *   3σ gate, but not the median of absolute deviations.
   */
-object TimeSeries {
+object TimeSeries extends graft.Enrolled {
 
   /** Parity rounding — same arithmetic as LlmOps.r4 (Spark's round()
     * HALF_UPs the decimal repr; DuckDB rounds the binary value —

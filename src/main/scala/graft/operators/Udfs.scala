@@ -14,7 +14,7 @@ import graft.Tables._
   * The UDAF is a classic partial+final aggregate: the buffer merges
   * associatively, so map-side combine still applies.
   */
-object Udfs {
+object Udfs extends graft.Enrolled {
 
   /** Double-precision cosine; accumulation order matches the built-in
     * `aggregate(zip_with(...))` form and DuckDB's list_inner_product. */

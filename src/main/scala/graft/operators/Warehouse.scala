@@ -27,7 +27,7 @@ import graft.Tables._
   * correlated probes per row); Q20/Q15/Q2 gate on broadcast scalar or
   * per-key aggregates.
   */
-object Warehouse {
+object Warehouse extends graft.Enrolled {
 
   private def cents(c: String): org.apache.spark.sql.Column =
     expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")

@@ -18,7 +18,7 @@ import graft.Tables._
   * see [[ntileShare]] — so no operator here funnels data through a
   * single partition.
   */
-object Windows {
+object Windows extends graft.Enrolled {
 
   /** Top-3 orders per customer by totalprice (deterministic tie-break). */
   def topkPerGroup(spark: SparkSession, dir: String): DataFrame = {

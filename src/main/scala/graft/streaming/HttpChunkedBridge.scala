@@ -33,10 +33,14 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * checkpoint-addressable offset), so the pipeline downstream of the
   * bridge keeps exactly-once semantics through the idempotent
   * batch_id-partitioned sink ([[EventIngest]]) — the socket source
-  * loses in-flight lines on crash. The bridge itself is at-least-once
-  * across reconnects (as is the reference's event pump); dedup within
-  * the watermark horizon ([[StreamingOps.dedupWithinWatermark]]) is
-  * the documented compensation, exactly as for redelivered events.
+  * loses in-flight lines on crash. The bridge itself serves ONE
+  * connection: its thread ends when the daemon closes the stream (or
+  * on the terminal chunk, an I/O error, or `stop()`), after landing
+  * the complete lines decoded so far. It does not reconnect and does
+  * not resume with `since=`, so events the daemon emits while no
+  * bridge is connected are not landed; a supervised reconnect is
+  * ROADMAP.md item 5. Redelivered events are for dedup within the
+  * watermark horizon ([[StreamingOps.dedupWithinWatermark]]).
   *
   * Malformed-frame tolerance: a line where a chunk size should be that
   * does not parse as hex is SKIPPED and decoding resyncs at the next

@@ -11,12 +11,7 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   // some operators (prefixJoin, LlmOps.shingles) cache a shared build
   // that Verify/Bench clear between queries — mirror that here so cached
@@ -540,6 +535,55 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
         (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet) +
         "; oracles without query: " +
         (SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet))
+  }
+
+  test("SparkEntry.merged: a row name enrolled by two objects fails " +
+      "instead of shadowing") {
+    val a = Map("q_a" -> 1, "q_dup" -> 2)
+    val b = Map("q_b" -> 3, "q_dup" -> 4)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.merged(Seq(a, b)))
+    assert(e.getMessage.contains("q_dup"))
+    assert(SparkEntry.merged(Seq(a, b - "q_dup")) == a ++ b.removed("q_dup"))
+  }
+
+  test("one session factory: only GraftSession.scala builds a " +
+      "SparkSession or reads the core-count variable") {
+    // split literals: this file must not match its own scan
+    val needles = Seq("SparkSession" + ".builder()", "SPARK_GRAFT_" + "CPUS")
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala"))
+      finally s.close()
+    }
+    assert(files.exists(_.endsWith("GraftSession.scala")))
+    val offenders = for {
+      f <- files if !f.endsWith("GraftSession.scala")
+      n <- needles if java.nio.file.Files.readString(f).contains(n)
+    } yield s"$f: $n"
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("size gates: both arms of prefix_join's verify tail and of " +
+      "rare_shingle_pairs' key width return the same rows at sf0.001") {
+    // the fixtures only reach the low side of these gates, so each
+    // forced arm is compared directly
+    def rows(df: => org.apache.spark.sql.DataFrame) = {
+      val out = df.collect().map(_.toString).sorted.toSeq
+      spark.catalog.clearCache()
+      out
+    }
+    val pjLow = rows(operators.Analytics.prefixJoinImpl(spark, sf,
+      shuffleHashVerify = false))
+    assert(pjLow.nonEmpty)
+    assert(rows(operators.Analytics.prefixJoinImpl(spark, sf,
+      shuffleHashVerify = true)) == pjLow)
+    val rsStrings = rows(operators.LlmOps.rareShinglePairsImpl(spark, sf,
+      hashKeys = false))
+    assert(rsStrings.nonEmpty)
+    assert(rows(operators.LlmOps.rareShinglePairsImpl(spark, sf,
+      hashKeys = true)) == rsStrings)
   }
 
   test("pagerankConverged: empty graph converges to zero rows, no NPE") {

@@ -13,12 +13,9 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val wh = java.nio.file.Files
     .createTempDirectory("graft_warehouse_").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir", wh)
     .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()

@@ -15,12 +15,8 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // another suite's session was created first in this JVM
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
+    GraftSession.builder(4)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 
